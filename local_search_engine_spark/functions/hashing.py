@@ -72,11 +72,6 @@ def h60_col(col):
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def h60_sql(expr: str) -> str:
-    """Same hash as h60_col, as DuckDB SQL over a string expression."""
-    return f"(('0x' || substr(md5({expr}), 1, 15))::bigint)"
-
-
 def h60_py(s: str) -> int:
     """Python twin of h60_col (hashlib only) — used by the Arrow simhash
     text kernel so tokenize+hash+pack run in ONE pass per doc."""
@@ -85,26 +80,13 @@ def h60_py(s: str) -> int:
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
-def minhash_col(h_col, perm: int):
-    """Spark: permuted hash (a*h + b) mod P for permutation index."""
-    from pyspark.sql import functions as F
-
-    a, b = MINHASH_A[perm], MINHASH_B[perm]
-    return F.pmod(F.lit(a) * h_col + F.lit(b), F.lit(MERSENNE_P))
-
-
-def minhash_sql(h_expr: str, perm: int) -> str:
-    a, b = MINHASH_A[perm], MINHASH_B[perm]
-    return f"(({a}::bigint * {h_expr} + {b}) % {MERSENNE_P})"
-
-
 def np_minhash_sigs(hh, out_dtype=None):
     """Numpy twin of the per-row MinHash signature: given the h32 values
     of one doc's shingle set, return the N_PERMS array_min((a*h+b)%P)
     signature. Exact int64 arithmetic (max a*h ≈ 2^53 < 2^63) — matches
-    minhash_col / minhash_sql bit-for-bit. Vectorized: one (16, n)
-    broadcast instead of 16 interpreted Catalyst lambda passes per row
-    (the expr formulation measured 16x the scan cost at sf0.1)."""
+    the pmod(a*h + b, P) column expression bit-for-bit. Vectorized: one
+    (16, n) broadcast instead of 16 interpreted Catalyst lambda passes
+    per row (the expr formulation measured 16x the scan cost at sf0.1)."""
     import numpy as np
 
     h = np.asarray(hh, dtype=np.int64)

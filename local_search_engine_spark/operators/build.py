@@ -284,17 +284,6 @@ def term_frequencies(tok_docs, impl: str = "auto"):
     )
 
 
-def corpus_stats(tok_docs) -> tuple[int, float]:
-    """A3: N and avgdl — one tiny aggregate, collected to the driver
-    (these are broadcast scalars in every downstream expression)."""
-    from pyspark.sql import functions as F
-
-    row = tok_docs.agg(
-        F.count("*").alias("n_docs"), F.avg("doc_len").alias("avgdl")
-    ).first()
-    return int(row["n_docs"]), float(row["avgdl"] or 0.0)
-
-
 def doc_freqs(tf):
     """A2: df(t) = distinct docs containing t — count over the (doc_id,
     term)-unique tf table, so a plain count, no countDistinct shuffle."""

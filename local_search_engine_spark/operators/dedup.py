@@ -455,27 +455,6 @@ def minhash_wide(
     return base.select("doc_id", *sigs)
 
 
-def minhash_signatures(
-    docs,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    shingle_sets=None,
-):
-    """(doc_id, perm, sig): tall MinHash signature rows, perm in
-    0..N_PERMS-1 — a posexplode of minhash_wide's per-doc row (the tall
-    shape is presentation; all signature work happens in-row, wide)."""
-    from pyspark.sql import functions as F
-
-    wide = minhash_wide(docs, text_col, id_col, n, shingle_sets=shingle_sets)
-    return wide.select(
-        "doc_id",
-        F.posexplode(F.array(*[F.col(f"s{p}") for p in range(N_PERMS)])).alias(
-            "perm", "sig"
-        ),
-    )
-
-
 def bucket_pairs(grouped, ids_col: str = "ids"):
     """(a, b) candidate pairs from a bucketed (…, ids array) DataFrame —
     all i<j pairs generated INSIDE the array with JVM expressions
@@ -944,10 +923,11 @@ def _cosine_pairs_udf():
     float order, so cosines are bit-identical (the fold's leading
     `0.0 +` can only flip a zero's sign, which `dots + 0.0` restores).
     Null/length-mismatched rows yield NULL exactly like the null-padding
-    zip_with; a 0/0 norm yields NaN, as the expression did. (Only a null
-    COMPONENT inside an equal-length pair differs: Arrow hands it to the
-    kernel as NaN, so the pair surfaces with a NaN cosine instead of
-    null — generated embedding tables contain no null components.)"""
+    zip_with. A NaN cosine — from a null COMPONENT, which Arrow hands to
+    the kernel as NaN, or from a 0/0 norm — is returned as NULL, the
+    fold's x + null = null: a NaN would sort above every double and pass
+    the threshold filter (test-pinned). The pandas→Arrow conversion
+    masks NaN to NULL as well; the kernel does not rely on it."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -981,7 +961,7 @@ def _cosine_pairs_udf():
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = dots / (na * nb)
             for r, i in enumerate(idxs):
-                vals[i] = float(cos[r])
+                vals[i] = None if np.isnan(cos[r]) else float(cos[r])
         return pd.Series(vals, dtype=object)
 
     _kernel.__annotations__ = {

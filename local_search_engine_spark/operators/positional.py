@@ -103,10 +103,10 @@ def build_positional_postings(
          Arrow seam — batch-vectorized (one encode_vb_sliced call per
          Arrow batch), never per-row Python encode. Pre-encoding here
          means the shuffle moves compressed bytes, not int arrays.
-      2. groupBy(term_bucket, part_id).applyInPandas → identical run
-         detection to the base encoder; pos_vb per run is a plain byte
-         concatenation because per-posting streams are self-delimiting
-         (tf = value count).
+      2. plans.delivery.map_groups on (term_bucket, part_id) →
+         identical run detection to the base encoder; pos_vb per run
+         is a plain byte concatenation because per-posting streams are
+         self-delimiting (tf = value count).
 
     One shuffle total, bounded per-task work for hot terms (doc-range
     sharding), term_bucket ready for partitionBy on persist.
@@ -116,6 +116,7 @@ def build_positional_postings(
 
     from ..functions.codec import DEFAULT_BLOCK_SPAN
     from ..functions.hashing import h32_col
+    from ..plans.delivery import map_groups
 
     span = block_span or DEFAULT_BLOCK_SPAN
 
@@ -178,26 +179,11 @@ def build_positional_postings(
         "term_bucket", F.pmod(h32_col(F.col("term")), F.lit(n_buckets)).cast("int")
     )
 
-    def encode_partition(batches):
-        # one Arrow round trip per partition instead of per
-        # (term_bucket, part_id) group — same delivery rewrite as
-        # operators/postings.py; per-group bytes identical
-        # (_encode_pos_group is unchanged and shared with compaction)
-        import pandas as pd
-
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        allp = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        outs = [
-            _encode_pos_group(grp, span)
-            for _, grp in allp.groupby(["term_bucket", "part_id"], sort=False)
-        ]
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
-
-    return keyed.repartition("term_bucket", "part_id").mapInPandas(
-        encode_partition, POS_POSTINGS_SCHEMA
+    return map_groups(
+        keyed,
+        ["term_bucket", "part_id"],
+        lambda pdf: _encode_pos_group(pdf, span),
+        POS_POSTINGS_SCHEMA,
     )
 
 

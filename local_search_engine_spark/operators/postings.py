@@ -65,19 +65,19 @@ def build_postings(
     """index: operators.build.InvertedIndex → (postings DF, shard_meta DF).
 
     Plan: tf ⋈ doc_len → one shuffle on (term_bucket, part_id) via
-    applyInPandas → per-group numpy block encode. No idf join: block
-    metadata is idf/avgdl-free by design (see module docstring), so the
-    encode touches ONLY shard-local inputs — which both removes a
-    vocabulary-sized join from the build's hot path and makes per-shard
-    incremental re-encoding sound. The doc_len join is left to AQE
-    (broadcast when actually small)."""
+    plans.delivery.map_groups → per-group numpy block encode. No idf
+    join: block metadata is idf/avgdl-free by design (see module
+    docstring), so the encode touches ONLY shard-local inputs — which
+    both removes a vocabulary-sized join from the build's hot path and
+    makes per-shard incremental re-encoding sound. The doc_len join is
+    left to AQE (broadcast when actually small)."""
     from pyspark.sql import functions as F
 
     from ..functions.codec import DEFAULT_BLOCK_SPAN
+    from ..functions.hashing import h32_col
+    from ..plans.delivery import map_groups
 
     span = block_span or DEFAULT_BLOCK_SPAN
-
-    from ..functions.hashing import h32_col
 
     # bucket hash is the PORTABLE h32 (md5-derived) — its driver-side
     # twin h32_py lets the query path derive bucket literals for
@@ -159,60 +159,31 @@ def build_postings(
             columns=cols,
         )
 
-    def encode_partition(batches):
-        """One hash repartition colocates each (term_bucket, part_id)
-        group; the kernel groups a partition's rows in pandas and runs
-        the per-group encoder — byte-identical output rows, but ONE
-        Arrow round trip per partition instead of per group (the
-        grouped-map machinery measured ~1 s of pure overhead for the
-        ~2 000 bucket-shard groups at sf1.0 — same finding as the WAND
-        delivery rewrite)."""
-        import pandas as pd
-
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        allp = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        outs = [
-            encode_group(grp)
-            for _, grp in allp.groupby(["term_bucket", "part_id"], sort=False)
-        ]
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
-
-    postings = joined.repartition("term_bucket", "part_id").mapInPandas(
-        encode_partition, POSTINGS_SCHEMA
-    )
-
-    def pack_partition(batches):
+    def pack_shard(grp):
         import numpy as np
         import pandas as pd
 
         from ..functions.codec import pack_i32
 
-        parts = [p for p in batches if len(p)]
-        if not parts:
-            return
-        allp = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        rows = []
-        for pid, grp in allp.groupby("part_id", sort=False):
-            grp = grp.sort_values("doc_id")
-            rows.append(
-                (
-                    int(pid),
-                    int(grp["doc_id"].iloc[0]),
-                    len(grp),
-                    pack_i32(grp["doc_len"].to_numpy(np.int32)),
-                )
-            )
-        yield pd.DataFrame(
-            rows, columns=["part_id", "first_doc_id", "n_docs", "doc_lens"]
+        grp = grp.sort_values("doc_id")
+        return pd.DataFrame(
+            {
+                "part_id": [int(grp["part_id"].iloc[0])],
+                "first_doc_id": [int(grp["doc_id"].iloc[0])],
+                "n_docs": [len(grp)],
+                "doc_lens": [pack_i32(grp["doc_len"].to_numpy(np.int32))],
+            }
         )
 
-    shard_meta = (
-        index.docs.select("doc_id", "doc_len")
-        .withColumn("part_id", (F.col("doc_id") / F.lit(docs_per_shard)).cast("long"))
-        .repartition("part_id")
-        .mapInPandas(pack_partition, SHARD_META_SCHEMA)
+    postings = map_groups(
+        joined, ["term_bucket", "part_id"], encode_group, POSTINGS_SCHEMA
+    )
+    shard_meta = map_groups(
+        index.docs.select("doc_id", "doc_len").withColumn(
+            "part_id", (F.col("doc_id") / F.lit(docs_per_shard)).cast("long")
+        ),
+        ["part_id"],
+        pack_shard,
+        SHARD_META_SCHEMA,
     )
     return postings, shard_meta

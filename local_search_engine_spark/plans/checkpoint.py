@@ -141,6 +141,17 @@ def build_persisted_index(
         "analyzer=default"
     )
     probe_fp = f"{content_fp};{probe_layout}"
+    # a unit is only as good as its data: every unit but the probe
+    # writes the directory it is named after, so forget units whose
+    # directory is gone (and the probe with them) and rebuild those
+    gone = [
+        u
+        for u in man.data["units"]
+        if u != "resume_probe" and not os.path.isdir(os.path.join(index_dir, u))
+    ]
+    if gone:
+        for u in gone + ["resume_probe"]:
+            man.data["units"].pop(u, None)
     # whole-build fast path: a build previously COMPLETED over exactly
     # this (keys, content, params, layout) — one scan-agg proves nothing
     # changed, so skip even the id-assignment jobs. Partial builds

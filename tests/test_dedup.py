@@ -576,3 +576,27 @@ def test_embedding_lsh_cosine_kernel_bit_exact(spark):
     emb.unpersist()
     assert len(got) > 50
     assert got == want  # bit-exact, not approx
+
+
+def test_null_component_cosine_is_null_not_nan(spark):
+    """A NaN cosine (a null component reaches the verify kernel as NaN;
+    a 0/0 norm) leaves the kernel as null — the zip_with fold's
+    semantics — so the pair fails the threshold: a NaN would sort above
+    every double and pass it."""
+    import numpy as np
+    import pandas as pd
+
+    from local_search_engine_spark.operators.similarity import srp_hyperplanes
+
+    kernel = D._cosine_pairs_udf().func
+    va = pd.Series([np.array([1.0, np.nan]), np.zeros(2), np.array([1.0, 0.0])])
+    vb = pd.Series([np.array([1.0, 1.0]), np.zeros(2), np.array([2.0, 0.0])])
+    assert kernel(va, vb).tolist() == [None, None, 1.0]
+
+    base = [-x for x in srp_hyperplanes(4, 1)[0]]  # bucket 0 at bits=1
+    emb = spark.createDataFrame(
+        [(1, base), (2, [base[0], None, *base[2:]]), (3, [2 * x for x in base])],
+        "vec_id long, embedding array<double>",
+    )
+    pairs = D.embedding_neardup_lsh_pairs(emb, dim=4, threshold=0.9, bits=1)
+    assert {(r["a"], r["b"]) for r in pairs.collect()} == {(1, 3)}

@@ -70,6 +70,23 @@ def test_resume_skips_done_and_matches_single_shot(spark, tmp_path):
     assert {ln["unit"] for ln in lines} == set(run_ids)
 
 
+def test_resume_rebuilds_when_index_data_is_gone(spark, tmp_path):
+    """A completed build certifies itself for the one-scan resume probe,
+    but the manifest is only as good as the data beside it: with the
+    postings directory deleted, a re-run must rebuild it rather than
+    trust the manifest."""
+    import shutil
+
+    corpus = gen_corpus_spark(spark, N_DOCS, partitions=8)
+    d = str(tmp_path / "idx")
+    build_persisted_index(spark, corpus, d, **KW)
+    want = _postings_content(spark, d)
+    shutil.rmtree(os.path.join(d, "postings"))
+
+    build_persisted_index(spark, corpus, d, **KW)
+    assert _postings_content(spark, d) == want
+
+
 def test_incremental_append_skips_untouched_shards(spark, tmp_path):
     """Incremental postings maintenance: after appending docs with NEW
     (tail) doc ids, a rebuild into the same index dir re-encodes ONLY

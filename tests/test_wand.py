@@ -80,6 +80,41 @@ def test_batch_query_set_matches_per_query(compressed):
         assert sorted(got.get(qid, [])) == sorted(want), text
 
 
+def _own_operators(df) -> list[str]:
+    """Physical operators df's own plan runs; cached inputs are leaves."""
+    out = []
+
+    def walk(node):
+        if node.nodeName() == "AdaptiveSparkPlan":
+            return walk(node.executedPlan())
+        out.append(node.simpleString(8))
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def test_plans_one_hash_exchange(compressed):
+    """build_postings and a WAND query each plan exactly one hash
+    Exchange over their cached inputs (map_groups' sort adds none), and
+    query() stays a TakeOrderedAndProject k-heap."""
+    idx, wand = compressed
+    # a layout the fixture did not cache, so the plan is not a cache hit
+    postings, shard_meta = build_postings(idx, docs_per_shard=2 * DOCS_PER_SHARD)
+    query = wand("def merge shard", 10)
+    for df in (postings, shard_meta, query):
+        ops = _own_operators(df)
+        shuffles = [o for o in ops if o.startswith("Exchange")]
+        assert len(shuffles) == 1 and "hashpartitioning" in shuffles[0], ops
+        assert any(o.startswith("Sort") for o in ops), ops
+    # the k-heap feeds the rank window; no window runs below it
+    ops = _own_operators(query)
+    top = next(i for i, o in enumerate(ops) if o.startswith("TakeOrderedAndProject"))
+    assert not any(o.startswith("Window") for o in ops[top:]), ops
+
+
 def test_derived_bound_retains_pruning_power(spark):
     """The idf-free (block_max_tf, block_min_dl)-derived upper bound
     must actually PRUNE in the positive-idf regime, not merely stay
