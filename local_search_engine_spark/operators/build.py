@@ -306,7 +306,11 @@ def idf_table(dfreq, n_docs: int, epsilon: float = BM25_EPSILON):
         F.log(F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
         - F.log(F.col("df") + F.lit(0.5)),
     )
-    avg_idf = float(raw.agg(F.avg("idf_raw")).first()[0] or 0.0)
+    # an exact decimal sum: the mean does not depend on the order in
+    # which partial aggregates merge, so it is the same for any layout
+    avg_idf = float(
+        raw.agg(F.avg(F.col("idf_raw").cast("decimal(38,18)"))).first()[0] or 0.0
+    )
     eps = epsilon * avg_idf
     idf = raw.withColumn(
         "idf",

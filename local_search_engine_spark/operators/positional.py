@@ -297,7 +297,15 @@ def persist_positional_postings(
 
 
 def load_positional_postings(spark, path: str):
-    return spark.read.parquet(path)
+    """The persisted positional postings at `path`, from
+    `plans.checkpoint.open_parquet`: a repeat load of an unchanged index
+    reuses its file listing and schema and starts no Spark job, and an
+    append (`append_positional_postings`), compaction or re-persist opens
+    it afresh. This assumes writers add, delete or replace files and
+    never modify one in place."""
+    from ..plans.checkpoint import open_parquet
+
+    return open_parquet(spark, path)
 
 
 def load_positional_meta(path: str) -> dict | None:

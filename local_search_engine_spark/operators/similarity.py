@@ -746,18 +746,26 @@ def srp_lsh_topk_persisted(
     """SRP-LSH top-k over a persisted bucket-partitioned inverted file:
     derive the probe bucket list driver-side (no Spark job), scan ONLY
     those bucket directories (partition pruning — verify with .explain:
-    PartitionFilters [bucket IN (...)]), exact cosine inside."""
+    PartitionFilters [bucket IN (...)]), exact cosine inside.
+
+    `vectors/` comes from `plans.checkpoint.open_parquet`: a repeat query
+    reuses its file listing and schema, so it starts only the query's
+    own jobs, and an append (`append_srp_index`) or re-persist opens it
+    afresh. This assumes writers add, delete or replace files and never
+    modify one in place."""
     import json
     import os
 
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from ..plans.checkpoint import open_parquet
+
     with open(os.path.join(index_dir, "meta.json")) as f:
         meta = json.load(f)
     qbucket = query_bucket(query_vec, meta["dim"], meta["bits"])
     probes = probe_buckets(qbucket, meta["bits"], probe_hamming)
-    vec = spark.read.parquet(os.path.join(index_dir, "vectors")).filter(
+    vec = open_parquet(spark, os.path.join(index_dir, "vectors")).filter(
         F.col("bucket").isin(probes)
     )
     s = vec.select("id", _cosine_expr(query_vec).alias("cosine"))

@@ -35,6 +35,46 @@ import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 
+# path -> (session, stamp, DataFrame): the last open_parquet of each
+# directory in this process, replaced on every re-open
+_OPENED: dict[str, tuple] = {}
+
+
+def _dir_stamp(path: str) -> tuple:
+    """(dir, inode, mtime_ns) of `path` and of every directory under it,
+    from one walk. Adding, deleting or renaming a file changes its
+    directory's mtime, and an overwrite recreates the directory."""
+    out = []
+    for d, _subdirs, _files in os.walk(path):
+        st = os.stat(d)
+        out.append((d, st.st_ino, st.st_mtime_ns))
+    return tuple(out)
+
+
+def open_parquet(spark, path: str):
+    """`spark.read.parquet(path)`, opened once per process and session
+    while the directory tree under `path` is unchanged.
+
+    A reused DataFrame keeps its file listing and inferred schema, so a
+    repeat open starts no listing or schema-inference job, and filters on
+    partition columns still prune against the kept listing. Any
+    directory in the tree changing (see `_dir_stamp`) re-opens the path.
+    The one assumption: writers add, delete or replace files and never
+    modify a file in place. Paths that are not local directories are
+    read every time."""
+    key = os.path.abspath(path)
+    if not os.path.isdir(key):
+        return spark.read.parquet(path)
+    # stamp BEFORE reading: a change racing the read leaves an older
+    # stamp beside a newer listing, which only costs one extra re-open
+    stamp = _dir_stamp(key)
+    hit = _OPENED.get(key)
+    if hit is not None and hit[0] is spark and hit[1] == stamp:
+        return hit[2]
+    df = spark.read.parquet(path)
+    _OPENED[key] = (spark, stamp, df)
+    return df
+
 
 class Manifest:
     def __init__(self, index_dir: str):
@@ -124,6 +164,7 @@ def build_persisted_index(
 
     Returns the manifest (with per-unit skip/build lineage).
     """
+    from pyspark import inheritable_thread_target
     from pyspark.sql import functions as F
 
     from ..functions.codec import DEFAULT_BLOCK_SPAN
@@ -167,6 +208,12 @@ def build_persisted_index(
         metrics = fn() or {}
         man.mark(unit, fpr, run_id, wall_ms=int((time.time() - t0) * 1000), **metrics)
         return True
+
+    def submit(pool, *args):
+        # each task runs under its own copy of the caller's local
+        # properties: its jobs carry the calling operator's job group,
+        # and concurrent tasks never share one properties object
+        return pool.submit(inheritable_thread_target(spark)(stage), *args)
 
     # Identity (doc_id + content_sha256) is computable WITHOUT tokenizing
     # — and group fingerprints depend on nothing else — so resolve ids
@@ -266,10 +313,10 @@ def build_persisted_index(
     # between small jobs, a measured ~2x overhead at 8 executors).
     with ThreadPoolExecutor(max_workers=4) as pool:
         futs = [
-            pool.submit(stage, "docs", write_docs),
-            pool.submit(stage, "tf", write_tf),
-            pool.submit(stage, "idf", write_idf),
-            pool.submit(stage, "shard_meta", write_shard_meta),
+            submit(pool, "docs", write_docs),
+            submit(pool, "tf", write_tf),
+            submit(pool, "idf", write_idf),
+            submit(pool, "shard_meta", write_shard_meta),
         ]
         for f in futs:
             f.result()
@@ -323,9 +370,7 @@ def build_persisted_index(
     # group writes are independent idempotent units — concurrent jobs
     with ThreadPoolExecutor(max_workers=4) as pool:
         futs = [
-            pool.submit(
-                stage, f"postings/group={g}", lambda g=g: write_group(g), gfp[g]
-            )
+            submit(pool, f"postings/group={g}", lambda g=g: write_group(g), gfp[g])
             for g in groups
         ]
         for f in futs:
@@ -343,17 +388,23 @@ def build_persisted_index(
 
 def load_index(spark, index_dir: str):
     """Load a persisted index → (InvertedIndex, postings, shard_meta,
-    stats dict). Query with operators.wand.make_wand_topk."""
+    stats dict). Query with operators.wand.make_wand_topk.
+
+    The five tables come from `open_parquet`: a repeat load of an
+    unchanged index reuses their file listings and schemas and starts no
+    Spark job, while a rebuild, append or deletion under index_dir opens
+    them afresh. This assumes writers add, delete or replace files and
+    never modify one in place. stats.json is re-read on every call."""
     from ..operators.build import BM25Params, InvertedIndex
 
     with open(os.path.join(index_dir, "stats.json")) as f:
         stats = json.load(f)
     params = BM25Params(k1=stats["k1"], b=stats["b"], epsilon=stats["epsilon"])
-    docs = spark.read.parquet(os.path.join(index_dir, "docs"))
-    tf = spark.read.parquet(os.path.join(index_dir, "tf"))
-    idf = spark.read.parquet(os.path.join(index_dir, "idf"))
-    postings = spark.read.parquet(os.path.join(index_dir, "postings"))
-    shard_meta = spark.read.parquet(os.path.join(index_dir, "shard_meta"))
+    docs = open_parquet(spark, os.path.join(index_dir, "docs"))
+    tf = open_parquet(spark, os.path.join(index_dir, "tf"))
+    idf = open_parquet(spark, os.path.join(index_dir, "idf"))
+    postings = open_parquet(spark, os.path.join(index_dir, "postings"))
+    shard_meta = open_parquet(spark, os.path.join(index_dir, "shard_meta"))
     idx = InvertedIndex(
         docs=docs,
         tf=tf,

@@ -140,8 +140,6 @@ def _ensure_phrase_filter(spark, corpus, idx, dirs):
     BM25 index (ids join back via content hash), persisted under
     ROOT/pos, fingerprint-keyed: stale or missing → rebuild. Returns
     the bound phrase-query object (only `matches` is used here)."""
-    import os
-
     from local_search_engine_spark.operators.positional import (
         build_positional_postings,
         load_positional_postings,

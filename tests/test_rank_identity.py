@@ -152,3 +152,19 @@ def test_explain_score_decomposes_exactly(index, oracle):
         )
     assert explain_score(index, "zzqq qqzz", int(top[0]["doc_id"])).count() == 0
     assert explain_score(index, "", 0).count() == 0
+
+
+def test_avg_idf_does_not_depend_on_partitioning(spark):
+    """The same doc-freq table under 1 and 7 partitions gives a
+    bit-identical avg_idf: its sum must not depend on the order in which
+    partial aggregates merge."""
+    import random
+
+    from local_search_engine_spark.operators.build import idf_table
+
+    rng = random.Random(5)
+    rows = [(f"t{i}", rng.randint(1, 4999)) for i in range(3000)]
+    dfreq = spark.createDataFrame(rows, "term string, df long")
+    one = idf_table(dfreq.repartition(1), 5000)[1]
+    seven = idf_table(dfreq.repartition(7), 5000)[1]
+    assert one.hex() == seven.hex()
